@@ -608,7 +608,8 @@ object Extras {
     val targets = broadcast(qs.toDF("q"))
     val sk = li.groupBy("flag").agg(
       graft.functions.QuantileSketchAgg.quantile_sketch(col("v")).as("sk"),
-      count(lit(1)).as("n"))
+      // ranks are over the values the sketch folded: it skips null v
+      count(col("v")).as("n"))
     val buckets = sk
       .select(col("flag"), col("n"), posexplode(col("sk")).as(Seq("idx", "cnt")))
       .filter(col("cnt") > 0)

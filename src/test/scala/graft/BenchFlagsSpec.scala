@@ -98,21 +98,6 @@ class BenchFlagsSpec extends AnyFunSuite {
     assert(adj2 == probed && rr2.isEmpty)
   }
 
-  test("capReruns keeps the largest-disagreement rows in caller order and " +
-      "counts the rest (r13 ADVICE: the in-line block must stay bounded)") {
-    def rr(k: String, orig: Double, rerun: Double) =
-      k -> Bench.Rerun(k, orig, rerun, 1.1, 1.2, "rerun")
-    val rows = Seq(rr("sf1.a", 4.0, 3.9), rr("sf1.b", 18.0, 5.0),
-      rr("sf10.c", 9.0, 3.0), rr("sf10.d", 5.0, 4.8))
-    val (kept, omitted) = Bench.capReruns(rows, 2)
-    // b (3.6x) and c (3.0x) have the biggest orig/rerun ratios; emission
-    // preserves the original tier order
-    assert(kept.map(_._1) == Seq("sf1.b", "sf10.c"))
-    assert(omitted == 2)
-    // under the cap: untouched, zero omitted
-    assert(Bench.capReruns(rows.take(2), 6) == ((rows.take(2), 0)))
-  }
-
   test("parseCpuStat: modern line, old short line, malformed text, " +
       "missing aggregate line") {
     // modern kernel: user nice system idle iowait irq softirq steal ...
@@ -273,8 +258,8 @@ class BenchFlagsSpec extends AnyFunSuite {
   }
 
   test("driftRowsOf (r16): rows come from the GIVEN (merged) samples, " +
-      "worst ratio first, capped with overflow counted; no-baseline keys " +
-      "do not participate") {
+      "worst ratio first, every row kept; no-baseline keys do not " +
+      "participate") {
     def best(s: Seq[Double]) = s.min
     def med(s: Seq[Double]) = s.sorted.apply(s.size / 2)
     val quiet = Map("a" -> 1.0, "b" -> 2.0, "c" -> 1.0, "d" -> 1.0)
@@ -284,16 +269,13 @@ class BenchFlagsSpec extends AnyFunSuite {
       "c" -> Seq(4.0, 5.0, 6.0),   // med 5.0 = 5.0x -> drift, worst
       "d" -> Seq(2.0, 2.0, 2.0),   // med 2.0 = 2.0x -> drift
       "new_key" -> Seq(9.0, 9.0, 9.0)) // no baseline: absent
-    val (rows, omitted) = Bench.driftRowsOf(tier, quiet, best, med, cap = 2)
-    // worst-ratio order, cap 2, third row counted not dropped silently
-    assert(rows.map(_._1) == Seq("c", "d") && omitted == 1)
+    val rows = Bench.driftRowsOf(tier, quiet, best, med)
     // each row is (key, best, median, quiet) OF THE SAMPLES GIVEN — the
     // emission contract: callers pass the fully merged tier, so a drift
     // row always describes the reported samples (r15 ADVICE ordering)
     assert(rows.head == (("c", 4.0, 5.0, 1.0)))
-    // uncapped: all three drift keys, nothing omitted
-    val (all3, om0) = Bench.driftRowsOf(tier, quiet, best, med, cap = 8)
-    assert(all3.map(_._1) == Seq("c", "d", "a") && om0 == 0)
+    // all three drift keys, worst ratio first
+    assert(rows.map(_._1) == Seq("c", "d", "a"))
   }
 
   test("bwCycle (r17, VERDICT item 1): a single full cycle — every slot " +

@@ -27,7 +27,7 @@ class ExtrasSpec extends AnyFunSuite {
     import spark.implicits._
     // heavy ties, octave boundaries, small exact cells, a far outlier —
     // the shapes the target-bucket walk must cut correctly
-    val vals: Seq[(String, Long)] =
+    val vals: Seq[(String, Option[Long])] =
       (0 until 4000).map { i =>
         val m = graft.functions.Mix64.mix(i.toLong)
         val flag = Seq("A", "B", "C")(i % 3)
@@ -39,12 +39,15 @@ class ExtrasSpec extends AnyFunSuite {
           case 4 => 123456789L               // hot tie
           case _ => (m & ((1L << 36) - 1)).abs
         }
-        (flag, v)
-      }
+        (flag, Some(v))
+      } ++
+      // null values: the sketch skips them, so ranks must too
+      (0 until 600).map(i => (Seq("A", "B", "C")(i % 3), None))
     val got = Extras.aggQuantileSketchOf(spark, vals.toDF("flag", "v"))
       .collect().map(r => (r.getString(0), r.getDouble(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap
-    val byFlag = vals.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+    val byFlag = vals.collect { case (f, Some(v)) => (f, v) }.groupBy(_._1)
+      .view.mapValues(_.map(_._2).sorted).toMap
     for (flag <- Seq("A", "B", "C"); q <- Seq(0.5, 0.9, 0.99)) {
       val sorted = byFlag(flag)
       val exact = sorted((math.ceil(q * sorted.length) - 1).toInt)
